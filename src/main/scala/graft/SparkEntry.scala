@@ -480,9 +480,9 @@ object SparkEntry {
     "q_filter_serving_topk" -> ((s, dir) => {
       val (eng, store) = serving(s, dir)
       rankTopKLocal(s,
-        eng.searchFiltered(
+        eng.search(
           graft.core.QueryParser.parse("table scan merge"), Int.MaxValue,
-          id => store.get(id).exists(_.lang == "en")),
+          Some(id => store.get(id).exists(_.lang == "en"))),
         10)
     }),
     // --- synonym-expanded search (optional Phase 10 "synonyms"): OR within

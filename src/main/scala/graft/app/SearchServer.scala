@@ -138,8 +138,8 @@ object SearchServer {
     * reference and resources close when the last in-flight request drains —
     * the double-buffer discipline that makes /reload invisible to clients.
     *
-    * `segmentsByKey` / `sidecarsByKey` (keyed by path|size|mtime file
-    * identity, the loadCached model) are the DELTA-RELOAD carry surface:
+    * `segmentsByKey` / `sidecarsByKey` (keyed by `SegmentIndex.fileKey`
+    * file identity, like the executor caches) are the DELTA-RELOAD carry surface:
     * loadState reuses a previous generation's unchanged parts so a reload
     * after a 2-bucket addDocuments on a 1000-segment index loads 2 segments,
     * not 1002 — and the transient double-pin shrinks to the delta.
@@ -480,12 +480,10 @@ object SearchServer {
           // `lang=` / `source=` are ADDITIVE metadata filters (deferred
           // Phase 9 "filters"): restrict candidates BEFORE truncation via
           // rank-order early-exit verification against the sidecar row.
-          val wantLang = params.get("lang").filter(_.nonEmpty)
-          val wantSource = params.get("source").filter(_.nonEmpty)
-          val hasFilter = wantLang.nonEmpty || wantSource.nonEmpty
-          def metaOk(row: DocRow): Boolean =
-            wantLang.forall(_ == row.lang) && wantSource.forall(_ == row.source)
-          def pred(id: Long): Boolean = st.docs(id).exists(metaOk)
+          val metaOk = SegmentSearch.MetaEq(params.get("lang").filter(_.nonEmpty), params.get("source").filter(_.nonEmpty))
+          val filter =
+            if (metaOk.lang.isEmpty && metaOk.source.isEmpty) None
+            else Some((id: Long) => st.docs(id).exists(metaOk))
           // `phrase=` / `prefix=` / `fuzzy=` / `wildcard=` are ADDITIVE
           // extension params (SURVEY §2.12/§2.14); the reference contract
           // (`q=` + QueryParser semantics) is untouched.
@@ -493,43 +491,24 @@ object SearchServer {
           // an unbounded `wildcard=*` would score the whole vocabulary as one
           // OR query per request. 4096 terms is far beyond any real
           // expansion; past the cap results diverge from the uncapped engine
-          // tiers by contract (first maxTerms in byte-lex order).
+          // tiers by contract (first maxTerms in byte-lex order). Snippets
+          // highlight the pattern's literal tokens.
           val maxExp = SearchServer.MaxExpandTerms
+          def ext(p: String, top: Seq[(Long, Double)]) = (p, top, graft.core.Tokenizer.tokenize(p))
           val (q, top, highlight) = (params.get("phrase"), params.get("prefix"),
               params.get("fuzzy"), params.get("wildcard")) match {
             case (Some(p), _, _, _) =>
               // a filtered phrase composes through textOf: a doc failing the
               // metadata filter yields no text, so verification rejects it
-              (p,
-               st.engine.searchPhrase(p, k,
-                 id => st.docs(id).filter(metaOk).map(_.text)),
-               graft.core.Tokenizer.tokenize(p))
-            case (None, Some(p), _, _) =>
-              (p,
-               if (hasFilter) st.engine.searchPrefixFiltered(p, k, pred, maxTerms = maxExp)
-               else st.engine.searchPrefix(p, k, maxTerms = maxExp),
-               graft.core.Tokenizer.tokenize(p))
-            case (None, None, Some(p), _) =>
-              // typo-tolerant expansion (distance <= 1); filters compose
-              // through the same bounded rank-order verification as prefix
-              (p,
-               if (hasFilter) st.engine.searchFuzzyFiltered(p, k, pred, maxTerms = maxExp)
-               else st.engine.searchFuzzy(p, k, maxTerms = maxExp),
-               graft.core.Tokenizer.tokenize(p))
-            case (None, None, None, Some(p)) =>
-              // general glob expansion (prefix generalized); snippet
-              // highlighting falls back to the pattern's literal chunks
-              (p,
-               if (hasFilter) st.engine.searchWildcardFiltered(p, k, pred, maxTerms = maxExp)
-               else st.engine.searchWildcard(p, k, maxTerms = maxExp),
-               graft.core.Tokenizer.tokenize(p))
+              ext(p, st.engine.searchPhrase(p, k, id => st.docs(id).filter(metaOk).map(_.text)))
+            case (None, Some(p), _, _) => ext(p, st.engine.searchPrefix(p, k, maxTerms = maxExp, filter = filter))
+            case (None, None, Some(p), _) => // typo-tolerant expansion (distance <= 1)
+              ext(p, st.engine.searchFuzzy(p, k, maxTerms = maxExp, filter = filter))
+            case (None, None, None, Some(p)) => ext(p, st.engine.searchWildcard(p, k, maxTerms = maxExp, filter = filter))
             case _ =>
               val qs = params.getOrElse("q", "")
               val pq = QueryParser.parse(qs)
-              (qs,
-               if (hasFilter) st.engine.searchFiltered(pq, k, pred)
-               else st.engine.search(pq, k),
-               pq.terms)
+              (qs, st.engine.search(pq, k, filter), pq.terms)
           }
           // assemble the response in ONE builder — at thousands of rps the
           // per-hit string concatenation was measurable allocation churn
@@ -617,13 +596,9 @@ object SearchServer {
     */
   def loadState(indexDir: String, prev: Option[IndexState] = None): IndexState = {
     val meta = SegmentIndex.readMeta(indexDir)
-    def fileKey(f: String): String = {
-      val p = java.nio.file.Paths.get(f)
-      s"$f|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-    }
     val segEntries: Seq[(String, SegmentIndex.LoadedSegment)] =
       SegmentIndex.liveSegmentFiles(indexDir, meta).map { f =>
-        val k = fileKey(f)
+        val k = SegmentIndex.fileKey(f)
         k -> prev.flatMap(_.segmentsByKey.get(k)).getOrElse(SegmentIndex.loadSegment(f))
       }
     val segs = segEntries.map(_._2).toIndexedSeq
@@ -662,7 +637,7 @@ object SearchServer {
     val shares: Seq[(String, SharedReader)] =
       try {
         scFiles.foreach { f =>
-          val k = fileKey(f)
+          val k = SegmentIndex.fileKey(f)
           val reused = prev.flatMap(_.sidecarsByKey.get(k)).filter(_.tryAcquire())
           acquired += (k -> reused.getOrElse(new SharedReader(DocSidecar.openBucket(f))))
         }

@@ -929,7 +929,6 @@ object SegmentIndex {
   ): Iterator[Manifest] = {
     val pfor = codec == BlockCodec.CodecPfor
     val results = scala.collection.mutable.ArrayBuffer[Manifest]()
-    val diag = sys.env.get("SPARK_GRAFT_WRITE_DIAG").contains("1")
     val md = MessageDigest.getInstance("SHA-256")
     val seenBuckets = scala.collection.mutable.HashSet[Int]()
     var cur = Int.MinValue
@@ -939,14 +938,9 @@ object SegmentIndex {
     var sumDl = 0L
     var lineageXor = 0L
     var prevDocId = Long.MinValue
-    var t0 = 0L
 
-    def flush(): Unit = if (cur != Int.MinValue && !skipping) {
-      val m = writeBucket(inv, cur, nDocs, sumDl, lineageXor, outDir, pfor)
-      if (diag)
-        System.err.println(f"[wdiag] bucket=$cur%5d docs=$nDocs%7d terms=${m.nTerms}%7d postings=${m.nPostings}%9d ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
-      results += m
-    }
+    def flush(): Unit =
+      if (cur != Int.MinValue && !skipping) results += writeBucket(inv, cur, nDocs, sumDl, lineageXor, outDir, pfor)
 
     while (it.hasNext) {
       val r = it.next()
@@ -958,7 +952,7 @@ object SegmentIndex {
         // aligned and a silent write would truncate the segment.
         require(seenBuckets.add(b), s"bucket $b rows are not contiguous — docstore layout violated")
         cur = b; nDocs = 0L; sumDl = 0L; lineageXor = 0L; prevDocId = Long.MinValue
-        t0 = System.nanoTime(); inv = null
+        inv = null
         // Skip ONLY when the existing manifest provably describes this run's
         // data: same lineage XOR and doc count as the current corpus slice.
         // A stale segment (source data changed under the same outDir) fails
@@ -1144,6 +1138,15 @@ object SegmentIndex {
 
   def sha256Hex(bytes: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(bytes).map("%02x".format(_)).mkString
+
+  /** File identity `path|size|mtime` of an on-disk segment or sidecar: an
+    * in-place rewrite of the same path gets a new key. Executor caches,
+    * the batch df-cache fingerprint and serving delta reloads all key on it.
+    */
+  def fileKey(path: String): String = {
+    val p = Paths.get(path)
+    s"$path|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
+  }
 
   // -------------------------------------------------------------- manifests
   import org.json4s._

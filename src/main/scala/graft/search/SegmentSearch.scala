@@ -1,107 +1,148 @@
 package graft.search
 
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, sum}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import scala.collection.parallel.CollectionConverters._
 
-import graft.core.{Bm25, ParsedQuery, Phrase, QueryParser, Tokenizer}
+import graft.core.{Bm25, EditDistance, ParsedQuery, Phrase, QueryParser, Tokenizer}
 import graft.index.{DocSidecar, SegmentIndex}
+import graft.index.DocSidecar.DocRow
 import graft.index.SegmentIndex.LoadedSegment
 
 /** Query serving over on-disk segments (the scale path / EP2).
   *
+  * Both segment tiers run one per-segment layer: one term-match rule
+  * (`TermMatch` / `matchTerms`) for every dictionary-expanded family and the
+  * idf pass, block-max WAND (`Wand.searchSegment`) for scoring, and one
+  * rank-order verifier (`verifyInRankOrder`) for phrase adjacency and
+  * metadata filters. The tiers differ only in fan-out and merge:
+  *
   * Batch mode (how QPS is measured): queries are broadcast, segments are a
   * Dataset of file paths fanned out over executors; each task loads (or hits
-  * the executor-local cache of) its segments and runs block-max WAND locally;
-  * per-(query, segment) top-k heaps come back — k+slack rows per query per
-  * segment, NOT candidate sets — and the driver merges with the reference's
-  * epsilon comparator. No shuffle on the query path at all.
+  * the executor-local cache of) its segments and runs the per-segment layer
+  * locally; per-(query, segment) top-k heaps come back — k+slack rows per
+  * query per segment, NOT candidate sets — and merge distributed with the
+  * reference's epsilon comparator. No shuffle on the search side at all.
   *
-  * In-memory mode: all segments pinned in the JVM (the searchd serving model)
-  * for single-query latency benchmarks.
+  * Serving mode (`ServingEngine`): all segments pinned in the JVM (the
+  * searchd model), scored in a loop or in parallel and merged in-process.
   */
 object SegmentSearch {
 
-  /** Executor-local segment cache — one load per (executor, file) across all
-    * queries and jobs in the JVM.
+  /** Executor-local caches keyed by file identity (`SegmentIndex.fileKey`):
+    * one load per (executor, file) across all queries and jobs in the JVM,
+    * and an in-place rebuild of the same path (resume invalidation, changed
+    * corpus) is re-loaded instead of served stale.
     */
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, LoadedSegment]()
+  @transient private lazy val segmentCache = new ConcurrentHashMap[String, LoadedSegment]()
+  @transient private lazy val sidecarCache = new ConcurrentHashMap[String, DocSidecar.BucketReader]()
 
   /** Driver-side global-df cache, keyed by index state (dir, n, sumDl,
     * segment-file fingerprint).
     */
   @transient private lazy val dfCaches =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Long, String), java.util.concurrent.ConcurrentHashMap[String, Long]]()
+    new ConcurrentHashMap[(String, Long, Long, String), ConcurrentHashMap[String, Long]]()
 
-  /** Executor-local load-once per segment FILE IDENTITY — the key includes
-    * size+mtime so an in-place rebuild of the same path (resume invalidation,
-    * changed corpus) is re-loaded instead of served stale; superseded entries
-    * for the same path are evicted.
-    */
-  def loadCached(path: String): LoadedSegment = {
-    val p = java.nio.file.Paths.get(path)
-    val key = s"$path|${java.nio.file.Files.size(p)}|${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
+  private def loadByIdentity[T](cache: ConcurrentHashMap[String, T], path: String)(
+      close: T => Unit, load: String => T): T = {
+    val key = SegmentIndex.fileKey(path)
     val hit = cache.get(key)
     if (hit != null) return hit
     val keys = cache.keys()
     while (keys.hasMoreElements) { // drop superseded versions of this path
       val k = keys.nextElement()
       if (k.startsWith(path + "|") && k != key) {
-        // Close the evicted segment's lazy FileChannel — long-lived executors
-        // must not leak a descriptor per superseded segment. A task racing an
+        // Close the evicted entry's lazy FileChannel — long-lived executors
+        // must not leak a descriptor per superseded file. A task racing an
         // in-place rebuild of the same path may see a ClosedChannelException
         // and retry — loud and correct (the bytes under it changed anyway).
         val old = cache.remove(k)
-        if (old != null) old.close()
+        if (old != null) close(old)
       }
     }
-    // lazy: executor tasks read the term dictionary only; posting records
-    // load on demand for the query terms that actually hit this segment
-    cache.computeIfAbsent(key, _ => SegmentIndex.loadSegment(path, eager = false))
+    cache.computeIfAbsent(key, _ => load(path))
   }
 
-  /** Executor-local sidecar reader cache (phrase batch verification), same
-    * file-identity key + superseded-version eviction discipline as
-    * `loadCached`. A reader pins 20 B/doc (dictionary only); text rows are
-    * positional reads.
+  /** Lazy load: executor tasks read the term dictionary only; posting
+    * records load on demand for the query terms that hit this segment.
     */
-  @transient private lazy val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DocSidecar.BucketReader]()
+  def loadCached(path: String): LoadedSegment =
+    loadByIdentity(segmentCache, path)(_.close(), SegmentIndex.loadSegment(_, eager = false))
 
-  def loadCachedSidecar(path: String): DocSidecar.BucketReader = {
-    val p = java.nio.file.Paths.get(path)
-    val key = s"$path|${java.nio.file.Files.size(p)}|${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-    val hit = sidecarCache.get(key)
-    if (hit != null) return hit
-    val keys = sidecarCache.keys()
-    while (keys.hasMoreElements) {
-      val k = keys.nextElement()
-      if (k.startsWith(path + "|") && k != key) {
-        val old = sidecarCache.remove(k)
-        if (old != null) old.close() // loud ClosedChannelException on racers, like segments
-      }
-    }
-    sidecarCache.computeIfAbsent(key, _ => DocSidecar.openBucket(path))
+  /** Sidecar reader for batch verification: pins 20 B/doc (dictionary
+    * only); text rows are positional reads.
+    */
+  def loadCachedSidecar(path: String): DocSidecar.BucketReader =
+    loadByIdentity(sidecarCache, path)(_.close(), DocSidecar.openBucket)
+
+  /** The doc sidecar beside a segment file: swap only the FILENAME prefix (a
+    * dir component containing "segment-" must not be rewritten).
+    */
+  private def sidecarOf(segmentFile: String): String = {
+    val sp = java.nio.file.Paths.get(segmentFile)
+    sp.resolveSibling(sp.getFileName.toString.replace("segment-", "docs-")).toString
   }
 
   /** Segment-file fan-out Dataset: files sliced straight into tasks via
     * `parallelize(files, n)` — r6: the old `createDataset(...).repartition(n)`
     * paid a full Exchange stage (map + fetch) in EVERY batch job before any
     * search work started. Slice count keeps the one-segment-per-task
-    * granularity up to 4x core count (straggler rebalance), grouping only
+    * granularity up to 4x core count (straggler rebalance: with 2
+    * segments/task a single slow pair doubles the stage wall), grouping only
     * past that.
     */
-  private def segmentFileDs(
-      spark: SparkSession,
-      files: Seq[String]
-  ): org.apache.spark.sql.Dataset[String] = {
+  private def segmentFileDs(spark: SparkSession, files: Seq[String]): Dataset[String] = {
     val n = math.max(1, math.min(files.size, 4 * spark.sparkContext.defaultParallelism))
     spark.createDataset(spark.sparkContext.parallelize(files, n))(Encoders.STRING)
   }
 
   final case class QueryHit(qid: Int, docId: Long, score: Double)
+  final case class RankedHit(qid: Int, rank: Int, docId: Long, score: Double)
+
+  /** The ONE term-match rule shared by every tier's dictionary-expanded
+    * families (prefix, wildcard, fuzzy, suggest, did-you-mean) and the batch
+    * idf pass (exact terms). Any faster way of listing matches (sorted or
+    * reversed vocabulary, SymSpell) must list exactly the terms `accepts`
+    * admits. The companion's constructors normalize user input.
+    */
+  sealed trait TermMatch extends Serializable { def accepts(term: String): Boolean }
+
+  object TermMatch {
+    final case class Exact(terms: Seq[String]) extends TermMatch {
+      def accepts(term: String): Boolean = terms.contains(term)
+    }
+    final case class Prefix(p: String) extends TermMatch {
+      def accepts(term: String): Boolean = term.startsWith(p)
+    }
+    /** Compiled glob ([[graft.core.Glob.matches]]) — the same term set as
+      * the dataflow tier's pushed-down LIKE.
+      */
+    final case class Glob(g: String) extends TermMatch {
+      def accepts(term: String): Boolean = graft.core.Glob.matches(g, term)
+    }
+    /** Levenshtein <= maxDist (banded DP, DuckDB `levenshtein` semantics),
+      * after the necessary length-band pre-check.
+      */
+    final case class Fuzzy(t: String, maxDist: Int) extends TermMatch {
+      def accepts(term: String): Boolean =
+        math.abs(term.length - t.length) <= maxDist && EditDistance.within(term, t, maxDist)
+    }
+
+    private def oneToken(s: String): Option[String] =
+      Tokenizer.tokenize(s) match { case Seq(t) => Some(t); case _ => None }
+    def prefix(s: String): Option[TermMatch] = oneToken(s).map(Prefix)
+    def glob(s: String): Option[TermMatch] = graft.core.Glob.normalize(s).map(Glob)
+    def fuzzy(s: String, maxDist: Int): Option[TermMatch] = oneToken(s).map(Fuzzy(_, maxDist))
+  }
+
+  /** (term, LOCAL df) for every term of `seg`'s dictionary that `m` accepts.
+    * Exact terms are hash lookups; every other rule walks the dictionary.
+    */
+  def matchTerms(seg: LoadedSegment, m: TermMatch): Iterator[(String, Long)] = m match {
+    case TermMatch.Exact(ts) => ts.iterator.flatMap(t => seg.terms.get(t).map(td => (t, td.df)))
+    case _ => seg.terms.iterator.collect { case (t, td) if m.accepts(t) => (t, td.df) }
+  }
 
   /** The ONE did-you-mean pick rule (the oracle contract shared by all
     * tiers): exact presence wins; else argmax global df with byte-lex tie;
@@ -113,6 +154,46 @@ object SegmentSearch {
     cs.find(_._1 == t)
       .orElse(cs.reduceOption((a, b) => if (b._2 > a._2 || (b._2 == a._2 && b._1 < a._1)) b else a))
       .getOrElse((t, 0L))
+  }
+
+  /** A doc-level filter over a doc's sidecar row: phrase adjacency or the
+    * lang/source metadata filter. Plain data, so it rides the batch
+    * broadcast under any serializer.
+    */
+  sealed trait DocFilter extends (DocRow => Boolean) with Serializable
+  final case class Adjacent(terms: IndexedSeq[String]) extends DocFilter {
+    def apply(r: DocRow): Boolean = Phrase.containsPhrase(r.text, terms)
+  }
+  /** Metadata equality filter (None = any value). */
+  final case class MetaEq(lang: Option[String], source: Option[String]) extends DocFilter {
+    def apply(r: DocRow): Boolean = lang.forall(_ == r.lang) && source.forall(_ == r.source)
+  }
+
+  /** Accept ranked hits passing `pred` IN RANK ORDER, early-exiting at k
+    * accepted (exact when the predicate only filters — the k first
+    * survivors ARE the filtered top-k) and hard-bounded by `maxVerify`
+    * checked candidates (a never-matching predicate on a frequent-term
+    * query must not become a full-corpus sidecar scan from one request).
+    */
+  private[search] def verifyInRankOrder(
+      ranked: Seq[(Long, Double)],
+      k: Int,
+      pred: Long => Boolean,
+      maxVerify: Int): Seq[(Long, Double)] = {
+    val kk = math.max(1, k)
+    val out = Seq.newBuilder[(Long, Double)]
+    var found = 0
+    var checked = 0
+    val it = ranked.iterator
+    while (found < kk && checked < maxVerify && it.hasNext) {
+      val hit = it.next()
+      checked += 1
+      if (pred(hit._1)) {
+        out += hit
+        found += 1
+      }
+    }
+    out.result()
   }
 
   /** Global idf per positive query term from IN-MEMORY segments: global df =
@@ -129,13 +210,10 @@ object SegmentSearch {
       if (df > 0) Some(t -> Bm25.idf(n, df)) else None
     }.toMap
 
+  // ------------------------------------------------------------ batch tier
+
   /** Distributed batch search: all queries against all segments.
     * Returns per query the reference-ranked top-k (epsilon comparator).
-    *
-    * Phase 1 (tiny): sum per-segment local dfs for the batch's query terms —
-    * |terms| x |segments| rows collected, and it warms the executor segment
-    * caches for phase 2. Phase 2: zero-shuffle WAND fan-out + distributed
-    * per-query merge.
     */
   def searchBatch(
       spark: SparkSession,
@@ -143,200 +221,125 @@ object SegmentSearch {
       queries: Seq[String],
       k: Int
   ): Map[Int, Seq[(Long, Double)]] =
-    searchBatchParsed(spark, indexDir,
-      queries.zipWithIndex.map { case (q, i) => (i, QueryParser.parse(q)) }, k)
+    scoreBatch(spark, indexDir, queries.map(q => (QueryParser.parse(q), None)), k)
 
-  private def searchBatchParsed(
+  /** Distributed PHRASE batch (SURVEY §2.12): the AND intersection of the
+    * phrase's terms, adjacency verified per segment against its sidecar.
+    */
+  def phraseBatch(
       spark: SparkSession,
       indexDir: String,
-      parsed: Seq[(Int, ParsedQuery)],
+      phrases: Seq[String],
+      k: Int
+  ): Map[Int, Seq[(Long, Double)]] =
+    scoreBatch(spark, indexDir, phrases.map { p =>
+      val terms = Tokenizer.tokenize(p).toIndexedSeq
+      (ParsedQuery(terms, Nil, isOr = false), Some(Adjacent(terms)))
+    }, k)
+
+  /** Distributed metadata-filtered batch search — EXTENSION (deferred Phase 9
+    * "filters"): the lang/source filter verified per segment against its
+    * sidecar, exactly like phrase adjacency.
+    */
+  def searchFilteredBatch(
+      spark: SparkSession,
+      indexDir: String,
+      queries: Seq[String],
+      k: Int,
+      lang: Option[String],
+      source: Option[String]
+  ): Map[Int, Seq[(Long, Double)]] =
+    scoreBatch(spark, indexDir, queries.map(q => (QueryParser.parse(q), Some(MetaEq(lang, source)))), k)
+
+  /** The ONE scoring fan-out of the batch tier. Phase 1 (tiny): global dfs
+    * for the batch's terms (`batchIdfs`), which also warms the executor
+    * segment caches. Phase 2: each task runs every query's WAND over its
+    * segments and emits per-(query, segment) top-k, then the distributed
+    * per-query merge.
+    *
+    * A query with a verification (phrase adjacency, metadata filter) instead
+    * enumerates its segment's FULL match set (k unbounded — the filter must
+    * precede truncation for an exact top-k) and checks the sibling sidecar
+    * row in rank order until k pass: any global top-k survivor in this
+    * segment is among its first k survivors, so the merge stays exact, text
+    * reads drop to ~k / selectivity per segment, and no candidate list
+    * leaves the task. Unbounded (no maxVerify) — this tier answers the
+    * oracle exactly.
+    */
+  private def scoreBatch(
+      spark: SparkSession,
+      indexDir: String,
+      queries: Seq[(ParsedQuery, Option[DocFilter])],
       k: Int
   ): Map[Int, Seq[(Long, Double)]] = {
     val meta = SegmentIndex.readMeta(indexDir)
+    if (queries.exists(_._2.nonEmpty)) DocSidecar.ensure(spark, indexDir) // idempotent; derived data
     val files = SegmentIndex.liveSegmentFiles(indexDir, meta)
-    val avgdl = meta.avgdl
-
-    import spark.implicits._
-    // one segment per task (up to 4x core count): finer granularity than
-    // segments-per-core shortens the straggler tail — with 2 segments/task a
-    // single slow pair doubles the stage wall; single-segment tasks let the
-    // scheduler rebalance
     val fileDs = segmentFileDs(spark, files)
+    val idfs = batchIdfs(indexDir, meta, files, fileDs, queries.flatMap(_._1.terms).distinct)
+    val avgdl = meta.avgdl
+    val bc = spark.sparkContext.broadcast((queries.zipWithIndex, idfs))
 
-    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, parsed.flatMap(_._2.terms).distinct)
-    val bc = spark.sparkContext.broadcast((parsed, idfs))
-
-    val queryDiag = sys.env.get("SPARK_GRAFT_QUERY_DIAG").contains("1")
     val hits = fileDs
       .mapPartitions { paths =>
         val (qs, idfMap) = bc.value
         paths.flatMap { p =>
-          val t0 = if (queryDiag) System.nanoTime() else 0L
           val seg = loadCached(p)
-          val out = qs.iterator.flatMap { case (qid, pq) =>
-            Wand.searchSegment(seg, pq, idfMap, avgdl, k).iterator
-              .map(h => QueryHit(qid, h.docId, h.score))
-          }
-          if (!queryDiag) out
-          else {
-            val buf = out.toVector // force, so the timing covers the search
-            System.err.println(f"[qdiag] ${p.split('/').last}%-18s ${(System.nanoTime() - t0) / 1e6}%8.1f ms  thread=${Thread.currentThread().getName}")
-            buf.iterator
+          lazy val sidecar = loadCachedSidecar(sidecarOf(p))
+          qs.iterator.flatMap {
+            case ((pq, None), qid) =>
+              Wand.searchSegment(seg, pq, idfMap, avgdl, k).iterator.map(h => QueryHit(qid, h.docId, h.score))
+            case ((pq, Some(ok)), qid) =>
+              val all = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
+              verifyInRankOrder(Bm25.sortHits(all.map(h => (h.docId, h.score))), k,
+                d => sidecar.get(d).exists(ok), Int.MaxValue)
+                .iterator.map { case (d, s) => QueryHit(qid, d, s) }
           }
         }
       }(Encoders.product[QueryHit])
 
-    mergeDistributed(hits, parsed.size, k)
+    mergeDistributed(hits, queries.size, k)
   }
 
-  /** Distributed did-you-mean — completes its three-tier story (dataflow
-    * `SearchEngine.didYouMeanDF`, serving `ServingEngine.didYouMean`): one
-    * distributed pass over per-segment dictionaries collects the
-    * Levenshtein<=maxDist candidates WITH their local dfs (length-band
-    * pre-check before the DP; only matched (term, df) rows leave the
-    * executors), dfs sum across segments driver-side, then the shared pick
-    * rule: exact presence wins, else argmax global df (ties byte-lex), else
-    * the term itself with df 0. Output rows: (pos, term, suggestion, df).
+  /** The ONE dictionary fan-out of the batch tier: (term, GLOBAL df) for
+    * every dictionary term that one of `ms` accepts — local dfs summed over
+    * segments (the Lucene model). The vocabulary never leaves the executors;
+    * only matched (term, local df) rows come back.
     */
-  def didYouMeanBatch(
-      spark: SparkSession,
-      indexDir: String,
-      query: String,
-      maxDist: Int = 1
-  ): Seq[(Long, String, String, Long)] = {
-    val terms = QueryParser.parse(query).terms
-    if (terms.isEmpty) return Nil
-    val tset = terms.distinct
-    val files = SegmentIndex.liveSegmentFiles(indexDir)
-    // Zero live segments (empty corpus / streaming dir before first commit):
-    // every term falls through to (itself, df 0) — same as the serving tier.
-    if (files.isEmpty) return terms.zipWithIndex.map { case (t, i) => (i + 1L, t, t, 0L) }
-    import spark.implicits._
-    val tbc = spark.sparkContext.broadcast(tset)
-    val dfs: Map[String, Long] = segmentFileDs(spark, files)
+  private def dictionaryBatch(fileDs: Dataset[String], ms: Seq[TermMatch]): Map[String, Long] =
+    fileDs
       .mapPartitions { paths =>
-        val ts = tbc.value
         paths.flatMap { p =>
-          loadCached(p).terms.iterator.collect {
-            case (cand, td) if ts.exists(t =>
-              math.abs(cand.length - t.length) <= maxDist &&
-                graft.core.EditDistance.within(cand, t, maxDist)) => (cand, td.df)
-          }
+          val seg = loadCached(p)
+          ms.iterator.flatMap(matchTerms(seg, _)).distinctBy(_._1)
         }
       }(Encoders.product[(String, Long)])
-      .toDF("term", "df")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    terms.zipWithIndex.map { case (t, i) =>
-      val pick = pickSuggestion(t,
-        dfs.view.filter { case (cand, _) => graft.core.EditDistance.within(cand, t, maxDist) })
-      (i + 1L, t, pick._1, pick._2)
-    }
-  }
+      .collect()
+      .groupMapReduce(_._1)(_._2)(_ + _)
 
-  /** Expansion descriptor for the batch tier's dictionary-expanded query
-    * family (prefix / wildcard / fuzzy) — serialized into the expansion
-    * task; normalization happens driver-side before construction.
-    */
-  private sealed trait Expansion extends Serializable
-  private final case class PrefixExp(p: String) extends Expansion
-  private final case class WildExp(glob: String) extends Expansion
-  private final case class FuzzyExp(t: String, maxDist: Int) extends Expansion
+  private def liveFileDs(spark: SparkSession, indexDir: String): Dataset[String] =
+    segmentFileDs(spark, SegmentIndex.liveSegmentFiles(indexDir))
 
-  /** Distributed batch twins of the serving tier's expanded queries —
-    * completes the three-tier matrix for prefix/wildcard/fuzzy (SURVEY
-    * §2.12/§2.15). Phase 0: expand the pattern against per-segment
-    * dictionaries IN PARALLEL — vocabulary never leaves the executors, only
-    * matched terms come back (a vocabulary-bounded, usually tiny list).
-    * The byte-lex-sorted union then scores OR-mode through the normal
-    * searchBatch machinery (global df = sum of local dfs, WAND, distributed
-    * merge) — identical semantics to the dataflow and serving tiers, so all
-    * three answer the same oracle SQL.
-    */
-  def prefixBatch(spark: SparkSession, indexDir: String, prefix: String, k: Int): Seq[(Long, Double)] = {
-    val norm = Tokenizer.tokenize(prefix)
-    if (norm.size != 1) return Nil
-    expansionBatch(spark, indexDir, PrefixExp(norm.head), k)
-  }
-
-  def wildcardBatch(spark: SparkSession, indexDir: String, pattern: String, k: Int): Seq[(Long, Double)] =
-    graft.core.Glob.normalize(pattern) match {
-      case None => Nil
-      case Some(g) => expansionBatch(spark, indexDir, WildExp(g), k)
-    }
-
-  def fuzzyBatch(spark: SparkSession, indexDir: String, term: String, k: Int, maxDist: Int = 1): Seq[(Long, Double)] = {
-    val norm = Tokenizer.tokenize(term)
-    if (norm.size != 1) return Nil
-    expansionBatch(spark, indexDir, FuzzyExp(norm.head, maxDist), k)
-  }
-
-  private def expansionBatch(
-      spark: SparkSession,
-      indexDir: String,
-      exp: Expansion,
-      k: Int
-  ): Seq[(Long, Double)] = {
-    val files = SegmentIndex.liveSegmentFiles(indexDir)
-    if (files.isEmpty) return Nil // repartition(0) would throw on an empty index
-    import spark.implicits._
-    val expanded = segmentFileDs(spark, files)
-      .mapPartitions { paths =>
-        paths.flatMap { p =>
-          val dict = loadCached(p).terms
-          exp match {
-            case PrefixExp(pre) => dict.keysIterator.filter(_.startsWith(pre))
-            case WildExp(g) => dict.keysIterator.filter(graft.core.Glob.matches(g, _))
-            case FuzzyExp(t, d) => dict.keysIterator.filter(c =>
-              math.abs(c.length - t.length) <= d && graft.core.EditDistance.within(c, t, d))
-          }
-        }
-      }(Encoders.STRING)
-      .collect() // matched terms only — vocabulary-bounded, dedup driver-side
-      .distinct.sorted.toSeq
-    if (expanded.isEmpty) Nil
-    else searchBatchParsed(spark, indexDir,
-      Seq(0 -> ParsedQuery(expanded, Nil, isOr = true)), k)(0)
-  }
-
-  final case class RankedHit(qid: Int, rank: Int, docId: Long, score: Double)
-
-  /** Phase 1 of a batch: global df (sum of per-segment local dfs) for the
-    * batch's positive terms. Results are cached per INDEX STATE — (dir, n,
-    * sumDl) plus a fingerprint of the segment files' (name, size, mtime),
-    * so any add/compact/in-place rebuild (even one that happens to preserve
-    * n and sumDl) changes the key. Repeated batches against a warm index
-    * skip the job entirely.
+  /** Phase 1 of a scoring batch: global df for the batch's positive terms.
+    * Results are cached per INDEX STATE — (dir, n, sumDl) plus a fingerprint
+    * of the segment files' identities, so any add/compact/in-place rebuild
+    * (even one that happens to preserve n and sumDl) changes the key.
+    * Repeated batches against a warm index skip the job entirely.
     */
   private def batchIdfs(
-      spark: SparkSession,
       indexDir: String,
       meta: SegmentIndex.Meta,
       files: Seq[String],
-      fileDs: org.apache.spark.sql.Dataset[String],
+      fileDs: Dataset[String],
       allTerms: Seq[String]
   ): Map[String, Double] = {
     val filesFp = SegmentIndex.sha256Hex(
-      files.map { f =>
-        val p = java.nio.file.Paths.get(f)
-        s"$f|${java.nio.file.Files.size(p)}|${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-      }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val cacheKey = (indexDir, meta.n, meta.sumDl, filesFp)
+      files.map(SegmentIndex.fileKey).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val dfCache = dfCaches.computeIfAbsent(
-      cacheKey, _ => new java.util.concurrent.ConcurrentHashMap[String, Long]())
+      (indexDir, meta.n, meta.sumDl, filesFp), _ => new ConcurrentHashMap[String, Long]())
     val missing = allTerms.filterNot(dfCache.containsKey)
     if (missing.nonEmpty) {
-      val tbc = spark.sparkContext.broadcast(missing)
-      val found = fileDs
-        .mapPartitions { paths =>
-          paths.flatMap { p =>
-            val seg = loadCached(p)
-            tbc.value.iterator.flatMap(t => seg.terms.get(t).map(td => (t, td.df)))
-          }
-        }(Encoders.product[(String, Long)])
-        .collect()
-        .groupBy(_._1)
-        .map { case (t, v) => t -> v.map(_._2).sum }
+      val found = dictionaryBatch(fileDs, Seq(TermMatch.Exact(missing)))
       missing.foreach(t => dfCache.put(t, found.getOrElse(t, 0L)))
     }
     allTerms.flatMap { t =>
@@ -350,7 +353,7 @@ object SegmentSearch {
     * — a driver-side merge would grow with segment count and anti-scale.
     */
   private def mergeDistributed(
-      hits: org.apache.spark.sql.Dataset[QueryHit],
+      hits: Dataset[QueryHit],
       nQueries: Int,
       k: Int
   ): Map[Int, Seq[(Long, Double)]] = {
@@ -372,160 +375,57 @@ object SegmentSearch {
     }.toMap
   }
 
-  /** Distributed PHRASE batch over on-disk segments — the batch scale path
-    * of the phrase extension (SURVEY §2.12). Per segment task: enumerate the
-    * FULL AND intersection of the phrase's terms (unbounded k — adjacency
-    * filtering must precede truncation for exact top-k), then verify
-    * adjacency against the segment's sibling doc sidecar (positional reads,
-    * executor-locally cached, 20 B/doc pinned) and emit only verified hits.
-    * Zero shuffle on the search side; the only exchange is the
-    * nQueries-group distributed merge — identical to `searchBatch`.
+  /** Distributed batch twins of the serving tier's expanded queries
+    * (SURVEY §2.12/§2.15): the pattern expands through the dictionary
+    * fan-out, then the byte-lex-sorted union scores OR-mode through the
+    * scoring fan-out — identical semantics to the dataflow and serving
+    * tiers, so all three answer the same oracle SQL.
     */
-  def phraseBatch(
+  def prefixBatch(spark: SparkSession, indexDir: String, prefix: String, k: Int): Seq[(Long, Double)] =
+    expansionBatch(spark, indexDir, TermMatch.prefix(prefix), k)
+
+  def wildcardBatch(spark: SparkSession, indexDir: String, pattern: String, k: Int): Seq[(Long, Double)] =
+    expansionBatch(spark, indexDir, TermMatch.glob(pattern), k)
+
+  def fuzzyBatch(spark: SparkSession, indexDir: String, term: String, k: Int, maxDist: Int = 1): Seq[(Long, Double)] =
+    expansionBatch(spark, indexDir, TermMatch.fuzzy(term, maxDist), k)
+
+  private def expansionBatch(spark: SparkSession, indexDir: String, m: Option[TermMatch], k: Int): Seq[(Long, Double)] =
+    m.map(m => dictionaryBatch(liveFileDs(spark, indexDir), Seq(m)).keys.toSeq.sorted) match {
+      case Some(terms) if terms.nonEmpty =>
+        scoreBatch(spark, indexDir, Seq((ParsedQuery(terms, Nil, isOr = true), None)), k)(0)
+      case _ => Nil
+    }
+
+  /** Distributed prefix suggestions — EXTENSION (deferred Phase 9
+    * "autocomplete"), the batch twin of `ServingEngine.suggest`: global df
+    * desc, then term asc.
+    */
+  def suggestBatch(spark: SparkSession, indexDir: String, prefix: String, k: Int): Seq[(String, Long)] =
+    TermMatch.prefix(prefix) match {
+      case Some(m) => dictionaryBatch(liveFileDs(spark, indexDir), Seq(m)).toSeq.sortBy { case (t, df) => (-df, t) }.take(k)
+      case None => Nil
+    }
+
+  /** Distributed did-you-mean — the batch twin of `SearchEngine.didYouMeanDF`
+    * and `ServingEngine.didYouMean`: one dictionary fan-out collects every
+    * term's Levenshtein <= maxDist candidates with their global dfs, then the
+    * shared pick rule runs per term. Output rows: (pos, term, suggestion, df).
+    */
+  def didYouMeanBatch(
       spark: SparkSession,
       indexDir: String,
-      phrases: Seq[String],
-      k: Int
-  ): Map[Int, Seq[(Long, Double)]] = {
-    val meta = SegmentIndex.readMeta(indexDir)
-    DocSidecar.ensure(spark, indexDir) // idempotent; sidecars are derived data
-    val files = SegmentIndex.liveSegmentFiles(indexDir, meta)
-    val parsed: Seq[(Int, IndexedSeq[String])] =
-      phrases.zipWithIndex.map { case (p, i) => (i, Tokenizer.tokenize(p).toIndexedSeq) }
-    val avgdl = meta.avgdl
-
-    import spark.implicits._
-    val fileDs = segmentFileDs(spark, files)
-
-    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, parsed.flatMap(_._2).distinct)
-    val bc = spark.sparkContext.broadcast((parsed, idfs))
-
-    val hits = fileDs
-      .mapPartitions { paths =>
-        val (qs, idfMap) = bc.value
-        paths.flatMap { p =>
-          val seg = loadCached(p)
-          // sibling sidecar: swap only the FILENAME prefix (a dir component
-          // containing "segment-" must not be rewritten)
-          lazy val sidecar = loadCachedSidecar {
-            val sp = java.nio.file.Paths.get(p)
-            sp.resolveSibling(sp.getFileName.toString.replace("segment-", "docs-")).toString
-          }
-          qs.iterator.flatMap { case (qid, terms) =>
-            if (terms.isEmpty) Iterator.empty
-            else {
-              val pq = ParsedQuery(terms, Nil, isOr = false)
-              val raw = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
-              // verify IN SEGMENT-RANK ORDER with early exit at k verified:
-              // any global top-k phrase hit living in this segment is among
-              // the segment's first k verified hits, so the merge stays
-              // exact while text reads drop from O(candidates) to ~k per
-              // segment for selective phrases
-              Bm25.sortHits(raw.map(h => (h.docId, h.score))).iterator
-                .filter { case (d, _) => sidecar.get(d).exists(r => Phrase.containsPhrase(r.text, terms)) }
-                .take(if (k == Int.MaxValue) Int.MaxValue else math.max(1, k))
-                .map { case (d, s) => QueryHit(qid, d, s) }
-            }
-          }
-        }
-      }(Encoders.product[QueryHit])
-
-    mergeDistributed(hits, phrases.size, k)
-  }
-
-  /** Distributed prefix suggestions over on-disk segments — EXTENSION
-    * (deferred Phase 9 "autocomplete"), the batch twin of
-    * `ServingEngine.suggest`. Per segment task: scan the (pinned, vocab-sized)
-    * dictionary for prefix matches and emit (term, LOCAL df); global df = sum
-    * over segments (the Lucene model), aggregated with map-side combine —
-    * the only shuffled rows are per-(segment, matching-term) partials, and
-    * the top-k runs as TakeOrderedAndProject (no global sort, the driver
-    * receives k rows).
-    */
-  def suggestBatch(
-      spark: SparkSession,
-      indexDir: String,
-      prefix: String,
-      k: Int
-  ): Seq[(String, Long)] = {
-    val norm = Tokenizer.tokenize(prefix)
-    if (norm.size != 1) return Nil
-    val p = norm.head
-    val files = SegmentIndex.liveSegmentFiles(indexDir)
-    import spark.implicits._
-    segmentFileDs(spark, files)
-      .mapPartitions { paths =>
-        paths.flatMap { f =>
-          loadCached(f).terms.iterator.collect {
-            case (t, td) if t.startsWith(p) => (t, td.df)
-          }
-        }
-      }(Encoders.product[(String, Long)])
-      .toDF("term", "df")
-      .groupBy("term")
-      .agg(org.apache.spark.sql.functions.sum("df").as("df"))
-      .orderBy(org.apache.spark.sql.functions.col("df").desc,
-               org.apache.spark.sql.functions.col("term").asc)
-      .limit(k)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .toSeq
-  }
-
-  /** Distributed metadata-filtered batch search — EXTENSION (deferred Phase 9
-    * "filters"), the batch twin of `ServingEngine.searchFiltered`. Per
-    * segment task: full enumeration (k unbounded — the filter must precede
-    * truncation for exact top-k), then the metadata predicate is verified
-    * against the segment's sibling doc sidecar IN RANK ORDER with early exit
-    * at k accepted (exact per segment because the filter only filters; the
-    * cross-segment merge stays exact because any global top-k survivor in
-    * this segment is among its first k survivors). Identical shape to
-    * `phraseBatch` with a metadata predicate instead of adjacency.
-    */
-  def searchFilteredBatch(
-      spark: SparkSession,
-      indexDir: String,
-      queries: Seq[String],
-      k: Int,
-      lang: Option[String],
-      source: Option[String]
-  ): Map[Int, Seq[(Long, Double)]] = {
-    val meta = SegmentIndex.readMeta(indexDir)
-    DocSidecar.ensure(spark, indexDir)
-    val files = SegmentIndex.liveSegmentFiles(indexDir, meta)
-    val parsed: Seq[(Int, ParsedQuery)] =
-      queries.zipWithIndex.map { case (q, i) => (i, QueryParser.parse(q)) }
-    val avgdl = meta.avgdl
-
-    import spark.implicits._
-    val fileDs = segmentFileDs(spark, files)
-
-    val idfs = batchIdfs(spark, indexDir, meta, files, fileDs, parsed.flatMap(_._2.terms).distinct)
-    val bc = spark.sparkContext.broadcast((parsed, idfs, lang, source))
-
-    val hits = fileDs
-      .mapPartitions { paths =>
-        val (qs, idfMap, wantLang, wantSource) = bc.value
-        paths.flatMap { p =>
-          val seg = loadCached(p)
-          lazy val sidecar = loadCachedSidecar {
-            val sp = java.nio.file.Paths.get(p)
-            sp.resolveSibling(sp.getFileName.toString.replace("segment-", "docs-")).toString
-          }
-          def accept(d: Long): Boolean = sidecar.get(d).exists { r =>
-            wantLang.forall(_ == r.lang) && wantSource.forall(_ == r.source)
-          }
-          qs.iterator.flatMap { case (qid, pq) =>
-            val raw = Wand.searchSegment(seg, pq, idfMap, avgdl, Int.MaxValue)
-            Bm25.sortHits(raw.map(h => (h.docId, h.score))).iterator
-              .filter { case (d, _) => accept(d) }
-              .take(if (k == Int.MaxValue) Int.MaxValue else math.max(1, k))
-              .map { case (d, s) => QueryHit(qid, d, s) }
-          }
-        }
-      }(Encoders.product[QueryHit])
-
-    mergeDistributed(hits, queries.size, k)
+      query: String,
+      maxDist: Int = 1
+  ): Seq[(Long, String, String, Long)] = {
+    val terms = QueryParser.parse(query).terms
+    if (terms.isEmpty) return Nil
+    val dfs = dictionaryBatch(liveFileDs(spark, indexDir), terms.distinct.map(TermMatch.Fuzzy(_, maxDist)))
+    terms.zipWithIndex.map { case (t, i) =>
+      val m = TermMatch.Fuzzy(t, maxDist)
+      val (s, df) = pickSuggestion(t, dfs.filter(c => m.accepts(c._1)))
+      (i + 1L, t, s, df)
+    }
   }
 
   /** Same batch contract served from pre-loaded in-memory segments (no Spark
@@ -581,24 +481,34 @@ object SegmentSearch {
     }
   }
 
+  // ---------------------------------------------------------- serving tier
+
+  /** Default hard bound on candidates a serving request verifies (phrase
+    * adjacency, metadata filter) — see `verifyInRankOrder`.
+    */
+  private val MaxVerify = 100000
+
   /** Long-lived in-memory serving engine (the searchd model): segments
     * pinned, per-term global idf cached across requests, and — for the dense
     * queries that dominate tail latency — segments scored IN PARALLEL within
     * one request on the shared ForkJoin pool (work-stealing keeps total
     * parallelism bounded under concurrent clients). One instance serves the
     * HTTP endpoint and the latency benchmarks.
+    *
+    * Phrase and filter verification run AFTER the merge, bounded by
+    * `maxVerify`: sidecar reads stay near k / selectivity per request, where
+    * per-segment checks would multiply them by up to the segment count.
     */
   final class ServingEngine(
       val segments: IndexedSeq[LoadedSegment],
       val meta: SegmentIndex.Meta,
-      parallelSegments: Boolean = true,
       // deletion-index depth for the fuzzy family: 1 (default) answers
       // maxDist=1 without a vocab scan; 2 (opt-in per generation — r6,
       // VERDICT r5 #5 — ~5-6x the depth-1 index memory) extends that to
       // maxDist=2. Radii past the depth fall back to the dictionary scan.
       symspellDepth: Int = 1
   ) {
-    private val idfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+    private val idfCache = new ConcurrentHashMap[String, java.lang.Double]()
     // SymSpell deletion neighborhood (SURVEY §2.14's 100 TB shape for the
     // fuzzy family): built once per serving generation, and ONLY when the
     // first fuzzy/did-you-mean request arrives (lazy) — per-request cost is
@@ -608,9 +518,8 @@ object SegmentSearch {
     // Byte-lex-sorted global vocabulary — the in-memory twin of the v5
     // dictionary footer's on-disk sort order: prefix expansion and suggest
     // become an O(log V) binary search + an O(|matches|) range walk instead
-    // of an O(V) scan per request (the "production tier can range-scan"
-    // note SURVEY §2.12/§2.16 carried since round 4). Built lazily once per
-    // serving generation, only when a prefix-family request arrives.
+    // of an O(V) scan per request. Built lazily once per serving generation,
+    // only when a prefix-family request arrives.
     private lazy val sortedVocab: Array[String] = {
       val set = new java.util.HashSet[String]()
       segments.foreach(_.terms.keysIterator.foreach(set.add))
@@ -618,25 +527,11 @@ object SegmentSearch {
       java.util.Arrays.sort(arr, java.util.Comparator.naturalOrder[String]())
       arr
     }
-
-    /** All vocabulary terms with `p` as prefix, byte-lex ascending — the
-      * sorted-dictionary range scan.
-      */
-    private def prefixRange(p: String): Seq[String] = {
-      val v = sortedVocab
-      var lo = java.util.Arrays.binarySearch(v.asInstanceOf[Array[AnyRef]], p)
-      if (lo < 0) lo = -lo - 1
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = lo
-      while (i < v.length && v(i).startsWith(p)) { out += v(i); i += 1 }
-      out.toSeq
-    }
-
     // Reversed-term dictionary (r6, VERDICT r5 #4): every vocab term
     // REVERSED, sorted — a `*bar` request becomes a range scan on `rab`
     // instead of an O(vocab) walk per request. Built lazily once per
-    // serving generation (the SymSpell discipline), only when the first
-    // leading-wildcard request arrives; memory = one extra String per term.
+    // serving generation, only when the first leading-wildcard request
+    // arrives; memory = one extra String per term.
     private lazy val reversedVocab: Array[String] = {
       val v = sortedVocab
       val arr = new Array[String](v.length)
@@ -646,19 +541,36 @@ object SegmentSearch {
       arr
     }
 
-    /** All vocabulary terms whose REVERSED form has `rp` as prefix (i.e.
-      * terms ending with rp.reverse), returned in the reversed dictionary's
-      * order — callers needing byte-lex order sort the (small) match set.
-      */
-    private def suffixRange(rp: String): Seq[String] = {
-      val v = reversedVocab
-      var lo = java.util.Arrays.binarySearch(v.asInstanceOf[Array[AnyRef]], rp)
+    /** All terms of the sorted array `v` with prefix `p`, in `v`'s order. */
+    private def range(v: Array[String], p: String): Seq[String] = {
+      var lo = java.util.Arrays.binarySearch(v.asInstanceOf[Array[AnyRef]], p)
       if (lo < 0) lo = -lo - 1
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = lo
-      while (i < v.length && v(i).startsWith(rp)) { out += v(i).reverse; i += 1 }
-      out.toSeq
+      var hi = lo
+      while (hi < v.length && v(hi).startsWith(p)) hi += 1
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(java.util.Arrays.copyOfRange(v, lo, hi))
     }
+
+    /** The terms `m` accepts over the pinned segments, byte-lex ascending,
+      * at most `maxTerms` (the byte-lex first) — exactly `matchTerms`' set,
+      * listed through the serving accelerators: a sorted-vocab range for a
+      * prefix or a glob's literal head (`foo*bar` walks only foo*), a
+      * reversed-vocab range for a glob's literal tail (`*bar`), SymSpell
+      * probes for fuzzy radii within the built depth. Only an unanchored
+      * glob (`*a*`) walks the whole vocabulary; radii past the built depth
+      * scan the dictionaries.
+      */
+    private def expand(m: TermMatch, maxTerms: Int): Seq[String] = m match {
+      case TermMatch.Prefix(p) => range(sortedVocab, p).take(maxTerms)
+      case TermMatch.Glob(g) =>
+        val head = g.takeWhile(_ != '*')
+        val tail = g.reverse.takeWhile(_ != '*')
+        if (head.nonEmpty) range(sortedVocab, head).iterator.filter(m.accepts).take(maxTerms).toSeq
+        else if (tail.nonEmpty) range(reversedVocab, tail).map(_.reverse).filter(m.accepts).sorted.take(maxTerms)
+        else sortedVocab.iterator.filter(m.accepts).take(maxTerms).toSeq
+      case TermMatch.Fuzzy(t, d) if d <= symspellDepth => symspell.neighbors(t, d).take(maxTerms)
+      case _ => segments.iterator.flatMap(matchTerms(_, m).map(_._1)).toSeq.distinct.sorted.take(maxTerms)
+    }
+
     private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     // Adaptive intra-request parallelism: fan a request's segments out across
     // cores only while few requests are in flight (cuts unloaded latency);
@@ -668,246 +580,139 @@ object SegmentSearch {
     private val parThreshold =
       math.max(2, Runtime.getRuntime.availableProcessors() / 4)
 
+    private def dfOf(t: String): Long = segments.iterator.flatMap(_.terms.get(t)).map(_.df).sum
+
     private def idfOf(t: String): Double =
       idfCache.computeIfAbsent(t, tt => {
-        val df = segments.iterator.flatMap(_.terms.get(tt)).map(_.df).sum
+        val df = dfOf(tt)
         if (df > 0) Bm25.idf(meta.n, df) else Double.NaN // NaN marks absent
       })
 
-    /** Ranked top-k (reference epsilon comparator) for one query. */
-    def search(query: String, k: Int): Seq[(Long, Double)] =
-      search(QueryParser.parse(query), k)
-
-    def search(pq: ParsedQuery, k: Int): Seq[(Long, Double)] = {
-      if (pq.terms.isEmpty) return Nil
+    /** The ONE serving fan-out: every pinned segment's WAND top-k (shared
+      * cross-segment theta), ranked with the reference epsilon comparator.
+      */
+    private def ranked(pq: ParsedQuery, k: Int): Seq[(Long, Double)] = {
       val load = inFlight.incrementAndGet()
       try {
         val idfs = pq.terms.distinct
           .flatMap { t => val v = idfOf(t); if (v.isNaN) None else Some(t -> v) }
           .toMap
-        val shared = new Wand.SharedTheta // cross-segment pruning for this request
+        // an unbounded enumeration never fills a heap: no threshold to share
+        val shared = if (k == Int.MaxValue) null else new Wand.SharedTheta
+        def one(seg: LoadedSegment) = Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared)
         val raw =
-          if (parallelSegments && segments.length > 1 && load <= parThreshold)
-            segments.par.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared)).seq
-          else
-            segments.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, k, shared))
-        Bm25.sortHits(raw.map(h => (h.docId, h.score))).take(k)
+          if (segments.length > 1 && load <= parThreshold) segments.par.flatMap(one).seq
+          else segments.flatMap(one)
+        Bm25.sortHits(raw.map(h => (h.docId, h.score)))
       } finally inFlight.decrementAndGet()
     }
 
-    /** Prefix term suggestions — EXTENSION (the reference's deferred Phase 9
-      * "autocomplete"): top-k dictionary terms for a prefix, ranked by GLOBAL
-      * df (sum of per-segment local dfs — the same Lucene-model summation as
-      * scoring) desc, then term asc. Round 5: rides the sorted-vocabulary
-      * range scan (the in-memory twin of the sorted v5 footer) —
-      * O(log V + |matches| x segments) per request, never O(V).
-      */
-    def suggest(prefix: String, k: Int): Seq[(String, Long)] = {
-      val norm = Tokenizer.tokenize(prefix)
-      if (norm.size != 1) return Nil
-      // range scan gives the matches; df = Σ per-segment local dfs via hash
-      // gets — O(log V + |matches| x segments), never O(V)
-      prefixRange(norm.head)
-        .map(t => t -> segments.iterator.flatMap(_.terms.get(t)).map(_.df).sum)
-        .sortBy { case (t, df) => (-df, t) }
-        .take(k)
-    }
+    /** Ranked top-k (reference epsilon comparator) for one query. */
+    def search(query: String, k: Int): Seq[(Long, Double)] =
+      search(QueryParser.parse(query), k)
 
-    /** Metadata-filtered top-k — EXTENSION (the reference's deferred Phase 9
-      * "filters"). The filter only RESTRICTS candidates (scores are global-idf
-      * BM25, unchanged), so the exact filtered top-k is obtained by ranking
-      * the FULL enumeration and verifying the predicate IN RANK ORDER with
-      * early exit at k accepted — the same argument (and code) as
-      * `searchPhrase`'s adjacency verification. `pred` typically reads the
-      * doc sidecar (source/lang travel on the 3-field sidecar row).
+    /** Ranked top-k for one query. With a `filter` (the Phase-9 metadata
+      * filter, or phrase adjacency) the FULL enumeration is ranked and the
+      * filter verified in rank order with early exit at k accepted — exact,
+      * because a filter only restricts candidates and never re-weights —
+      * and hard-bounded by `maxVerify` checked candidates.
       */
-    def searchFiltered(
+    def search(
         pq: ParsedQuery,
         k: Int,
-        pred: Long => Boolean,
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val ranked = search(pq, Int.MaxValue)
-      verifyInRankOrder(ranked, k, pred, maxVerify)
+        filter: Option[Long => Boolean] = None,
+        maxVerify: Int = MaxVerify): Seq[(Long, Double)] =
+      if (pq.terms.isEmpty) Nil
+      else filter match {
+        case None => ranked(pq, k).take(k)
+        case Some(ok) => verifyInRankOrder(ranked(pq, Int.MaxValue), k, ok, maxVerify)
+      }
+
+    /** Phrase-adjacent top-k over segments — EXTENSION (the reference's
+      * deferred phrase phase; see `graft.core.Phrase` and SURVEY §2.12): the
+      * AND intersection of the phrase's terms (posting-level work only; score
+      * pruning cannot apply before the adjacency filter without losing
+      * exactness), adjacency verified through `textOf` in rank order. The
+      * phrase only FILTERS, so expected text reads ≈ k / selectivity;
+      * `maxVerify` bounds the pathological frequent-term phrase that never
+      * occurs adjacently (best-effort-truncated past the cap instead of a
+      * full-corpus text scan from one cheap HTTP request).
+      */
+    def searchPhrase(
+        phrase: String,
+        k: Int,
+        textOf: Long => Option[String],
+        maxVerify: Int = MaxVerify): Seq[(Long, Double)] = {
+      val terms = Tokenizer.tokenize(phrase).toIndexedSeq
+      search(ParsedQuery(terms, Nil, isOr = false), k,
+        Some(id => textOf(id).exists(Phrase.containsPhrase(_, terms))), maxVerify)
     }
 
-    /** Metadata-filtered prefix search — the prefix expansion scored OR-mode
-      * with the Phase-9 filter verified in rank order (see `searchFiltered`).
+    /** Prefix top-k — EXTENSION (SURVEY §2.12): the expansion scored OR-mode
+      * in byte-lex term order (matching `SearchEngine.prefixScoredDF`).
+      * Default UNCAPPED so this tier scores the exact term set the dataflow
+      * twin does (tier parity is the oracle contract); `maxTerms` is an
+      * opt-in latency guard for degenerate one-letter prefixes — a cap makes
+      * results diverge from the dataflow tier on large vocabularies.
       */
-    def searchPrefixFiltered(
+    def searchPrefix(
         prefix: String,
         k: Int,
-        pred: Long => Boolean,
         maxTerms: Int = Int.MaxValue,
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val expanded = expandPrefix(prefix, maxTerms)
-      if (expanded.isEmpty) Nil
-      else searchFiltered(ParsedQuery(expanded, Nil, isOr = true), k, pred, maxVerify)
-    }
+        filter: Option[Long => Boolean] = None): Seq[(Long, Double)] =
+      searchExpanded(TermMatch.prefix(prefix), k, maxTerms, filter)
 
-    /** Wildcard + metadata filter: glob expansion composed through the same
-      * bounded rank-order verification as prefix.
-      */
-    def searchWildcardFiltered(
+    /** General wildcard (`*bar`, `foo*bar`) — prefix generalized. */
+    def searchWildcard(
         pattern: String,
         k: Int,
-        pred: Long => Boolean,
         maxTerms: Int = Int.MaxValue,
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val expanded = expandWildcard(pattern, maxTerms)
-      if (expanded.isEmpty) Nil
-      else searchFiltered(ParsedQuery(expanded, Nil, isOr = true), k, pred, maxVerify)
-    }
+        filter: Option[Long => Boolean] = None): Seq[(Long, Double)] =
+      searchExpanded(TermMatch.glob(pattern), k, maxTerms, filter)
 
-    /** Prefix top-k over segments — EXTENSION (same deferred wildcard phase
-      * as phrases; SURVEY §2.12). Expands the prefix against each segment's
-      * in-memory term dictionary, then scores the union OR-mode in byte-lex
-      * term order (matching `SearchEngine.prefixScoredDF`). Round 5: the
-      * expansion is a binary search + range walk over the lazily-built
-      * sorted global vocabulary (the in-memory twin of the sorted v5
-      * dictionary footer) — O(log V + |matches|), never O(V) per request.
-      * Default UNCAPPED so this tier scores the
-      * exact term set the dataflow twin does (tier parity is the oracle
-      * contract); pass `maxTerms` as an opt-in latency guard for degenerate
-      * one-letter prefixes — note a cap makes results diverge from the
-      * dataflow tier on large vocabularies.
+    /** Typo-tolerant top-k — EXTENSION (the reference's own competitive-gap
+      * row, COMMERCIAL_ROADMAP.md:31): every term within Levenshtein <=
+      * `maxDist`, scored like `searchPrefix`.
       */
-    def searchPrefix(prefix: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] = {
-      val expanded = expandPrefix(prefix, maxTerms)
-      if (expanded.isEmpty) Nil
-      else search(ParsedQuery(expanded, Nil, isOr = true), k)
-    }
-
-    /** General wildcard (`*bar`, `foo*bar`) — prefix generalized; expands
-      * per-segment dictionaries through the compiled glob
-      * ([[graft.core.Glob.matches]], identical term set to the dataflow
-      * tier's pushed-down LIKE) and scores the union OR-mode in byte-lex
-      * order. A literal leading chunk bounds the walk to its sorted-vocab
-      * range; a leading `*` walks the (one, global, sorted) vocabulary.
-      */
-    def searchWildcard(pattern: String, k: Int, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] = {
-      val expanded = expandWildcard(pattern, maxTerms)
-      if (expanded.isEmpty) Nil
-      else search(ParsedQuery(expanded, Nil, isOr = true), k)
-    }
-
-    private def expandWildcard(pattern: String, maxTerms: Int): Seq[String] =
-      graft.core.Glob.normalize(pattern) match {
-        case None => Nil
-        case Some(g) =>
-          // a literal leading chunk bounds the scan to its dictionary range
-          // (`foo*bar` walks only foo*); a leading '*' with a literal TAIL
-          // (`*bar`) range-scans the REVERSED dictionary (r6) — matches are
-          // re-sorted byte-lex so the capped set and score order are
-          // identical to the forward walk; only an unanchored pattern
-          // (`*a*`) still walks the whole (one, global, sorted) vocab
-          val lit = g.takeWhile(_ != '*')
-          if (lit.nonEmpty)
-            prefixRange(lit).iterator
-              .filter(graft.core.Glob.matches(g, _)).take(maxTerms).toSeq
-          else {
-            val tail = g.reverse.takeWhile(_ != '*').reverse
-            if (tail.nonEmpty)
-              suffixRange(tail.reverse)
-                .filter(graft.core.Glob.matches(g, _))
-                .sorted.take(maxTerms)
-            else
-              sortedVocab.iterator
-                .filter(graft.core.Glob.matches(g, _)).take(maxTerms).toSeq
-          }
-      }
-
-    /** Typo-tolerant top-k over segments — EXTENSION (the reference's own
-      * competitive-gap row, COMMERCIAL_ROADMAP.md:31). Expands the term
-      * against each segment's in-memory dictionary at Levenshtein <=
-      * `maxDist` (banded DP, length pre-check — `graft.core.EditDistance`,
-      * DuckDB `levenshtein` semantics), then scores the union OR-mode in
-      * byte-lex term order — exactly `searchPrefix`'s discipline. Round 5:
-      * maxDist=1 (the default) rides the precomputed SymSpell deletion
-      * neighborhood (O(|term|) probes per request); round 6: a generation
-      * built with `symspellDepth = 2` extends that to maxDist=2
-      * (O(|term|^2) probes); radii past the built depth fall back to the
-      * dictionary scan.
-      */
-    def searchFuzzy(term: String, k: Int, maxDist: Int = 1, maxTerms: Int = Int.MaxValue): Seq[(Long, Double)] = {
-      val expanded = expandFuzzy(term, maxDist, maxTerms)
-      if (expanded.isEmpty) Nil
-      else search(ParsedQuery(expanded, Nil, isOr = true), k)
-    }
-
-    /** Serving twin of `SearchEngine.didYouMeanDF` — same pick rule (exact
-      * presence wins; else highest GLOBAL df within Levenshtein <= maxDist,
-      * ties byte-lex; else the term itself with df 0). Global df = Σ of the
-      * segments' local dfs, so the answer is bit-identical to the dataflow
-      * tier's. One dictionary scan per request (the searchFuzzy note).
-      */
-    def didYouMean(query: String, maxDist: Int = 1): Seq[(Long, String, String, Long)] = {
-      val terms = QueryParser.parse(query).terms
-      if (terms.isEmpty) return Nil
-      def dfOf(c: String): Long = segments.iterator.flatMap(_.terms.get(c)).map(_.df).sum
-      if (maxDist <= symspellDepth) {
-        // SymSpell path: per term, O(|t|^depth) probes + a verified candidate
-        // set whose dfs are summed with per-segment hash gets — nothing here
-        // is proportional to vocabulary size
-        terms.zipWithIndex.map { case (t, i) =>
-          val cands = symspell.neighbors(t, maxDist) // byte-lex sorted, verified
-          val pick = pickSuggestion(t, cands.view.map(c => (c, dfOf(c))))
-          (i + 1L, t, pick._1, pick._2)
-        }
-      } else {
-        // fallback scan for radii the deletion index does not cover
-        val tset = terms.distinct
-        val dfs = scala.collection.mutable.HashMap[String, Long]()
-        segments.foreach { seg =>
-          seg.terms.foreach { case (cand, td) =>
-            if (tset.exists(t =>
-              math.abs(cand.length - t.length) <= maxDist &&
-                graft.core.EditDistance.within(cand, t, maxDist)))
-              dfs.update(cand, dfs.getOrElse(cand, 0L) + td.df)
-          }
-        }
-        terms.zipWithIndex.map { case (t, i) =>
-          val pick = SegmentSearch.pickSuggestion(t,
-            dfs.view.filter { case (cand, _) => graft.core.EditDistance.within(cand, t, maxDist) })
-          (i + 1L, t, pick._1, pick._2)
-        }
-      }
-    }
-
-    /** Metadata-filtered fuzzy search — the expansion scored OR-mode with the
-      * Phase-9 filter verified in rank order (see `searchFiltered`).
-      */
-    def searchFuzzyFiltered(
+    def searchFuzzy(
         term: String,
         k: Int,
-        pred: Long => Boolean,
         maxDist: Int = 1,
         maxTerms: Int = Int.MaxValue,
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val expanded = expandFuzzy(term, maxDist, maxTerms)
-      if (expanded.isEmpty) Nil
-      else searchFiltered(ParsedQuery(expanded, Nil, isOr = true), k, pred, maxVerify)
-    }
+        filter: Option[Long => Boolean] = None): Seq[(Long, Double)] =
+      searchExpanded(TermMatch.fuzzy(term, maxDist), k, maxTerms, filter)
 
-    private def expandFuzzy(term: String, maxDist: Int, maxTerms: Int): Seq[String] = {
-      val norm = Tokenizer.tokenize(term)
-      if (norm.size != 1) return Nil
-      val t = norm.head
-      val all =
-        if (maxDist <= symspellDepth) symspell.neighbors(t, maxDist) // probes, not O(vocab)
-        else // fallback: radii past the built deletion depth scan
-          segments.iterator
-            .flatMap(_.terms.keysIterator.filter(c =>
-              graft.core.EditDistance.within(c, t, maxDist)))
-            .toSeq.distinct.sorted
-      all.take(maxTerms)
-    }
+    private def searchExpanded(
+        m: Option[TermMatch],
+        k: Int,
+        maxTerms: Int,
+        filter: Option[Long => Boolean]): Seq[(Long, Double)] =
+      m.map(expand(_, maxTerms)) match {
+        case Some(terms) if terms.nonEmpty => search(ParsedQuery(terms, Nil, isOr = true), k, filter)
+        case _ => Nil
+      }
 
-    private def expandPrefix(prefix: String, maxTerms: Int): Seq[String] = {
-      val norm = Tokenizer.tokenize(prefix)
-      if (norm.size != 1) return Nil
-      // sorted-vocab range scan (already byte-lex ascending and distinct)
-      prefixRange(norm.head).take(maxTerms)
-    }
+    /** Prefix term suggestions — EXTENSION (the reference's deferred Phase 9
+      * "autocomplete"): top-k dictionary terms for a prefix, ranked by GLOBAL
+      * df (sum of per-segment local dfs) desc, then term asc —
+      * O(log V + |matches| x segments) per request, never O(V).
+      */
+    def suggest(prefix: String, k: Int): Seq[(String, Long)] =
+      TermMatch.prefix(prefix) match {
+        case Some(m) => expand(m, Int.MaxValue).map(t => t -> dfOf(t)).sortBy { case (t, df) => (-df, t) }.take(k)
+        case None => Nil
+      }
+
+    /** Serving twin of `SearchEngine.didYouMeanDF` — the shared pick rule
+      * over each term's fuzzy candidates; global df = Σ of the segments'
+      * local dfs, so the answer is bit-identical to the dataflow tier's.
+      */
+    def didYouMean(query: String, maxDist: Int = 1): Seq[(Long, String, String, Long)] =
+      QueryParser.parse(query).terms.zipWithIndex.map { case (t, i) =>
+        val cands = expand(TermMatch.Fuzzy(t, maxDist), Int.MaxValue)
+        val (s, df) = pickSuggestion(t, cands.view.map(c => (c, dfOf(c))))
+        (i + 1L, t, s, df)
+      }
 
     /** Learning-to-rank re-rank — EXTENSION (the roadmap's optional Phase 10
       * "LTR" row; see [[graft.search.Ltr]] for the model and the distributed
@@ -952,74 +757,6 @@ object SegmentSearch {
         }
         .sortBy { case (id, r) => (-r, id) }
         .take(k)
-    }
-
-    /** Phrase-adjacent top-k over segments — EXTENSION (the reference's
-      * deferred phrase phase; see `graft.core.Phrase` and SURVEY §2.12).
-      *
-      * Stage 1 enumerates the FULL AND intersection (k unbounded, no theta —
-      * posting-level work only, the same cost as a plain AND query; score
-      * pruning cannot apply before the adjacency filter without losing
-      * exactness). Stage 2 ranks the candidates with the reference epsilon
-      * comparator FIRST, then verifies adjacency IN RANK ORDER with early
-      * exit: because the phrase only FILTERS (scores are the BM25 AND
-      * scores), the first k candidates that pass verification ARE the exact
-      * phrase top-k — expected sidecar text reads ≈ k / selectivity instead
-      * of O(all candidates). `maxVerify` hard-bounds the pathological case
-      * (a frequent-term phrase that never occurs adjacently): past the cap
-      * the result is best-effort-truncated instead of an accidental-DoS
-      * full-corpus text scan from one cheap HTTP request.
-      */
-    def searchPhrase(
-        phrase: String,
-        k: Int,
-        textOf: Long => Option[String],
-        maxVerify: Int = 100000): Seq[(Long, Double)] = {
-      val terms = Tokenizer.tokenize(phrase).toIndexedSeq
-      if (terms.isEmpty) return Nil
-      val pq = ParsedQuery(terms, Nil, isOr = false)
-      val load = inFlight.incrementAndGet()
-      try {
-        val idfs = terms.distinct
-          .flatMap { t => val v = idfOf(t); if (v.isNaN) None else Some(t -> v) }
-          .toMap
-        if (idfs.size < terms.distinct.size) return Nil // AND with a 0-df term
-        val raw =
-          if (parallelSegments && segments.length > 1 && load <= parThreshold)
-            segments.par.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, Int.MaxValue)).seq
-          else
-            segments.flatMap(seg => Wand.searchSegment(seg, pq, idfs, meta.avgdl, Int.MaxValue))
-        val ranked = Bm25.sortHits(raw.map(h => (h.docId, h.score)))
-        verifyInRankOrder(ranked, k,
-          id => textOf(id).exists(t => Phrase.containsPhrase(t, terms)), maxVerify)
-      } finally inFlight.decrementAndGet()
-    }
-
-    /** Accept ranked hits passing `pred` IN RANK ORDER, early-exiting at k
-      * accepted (exact when the predicate only filters — the k first
-      * survivors ARE the filtered top-k) and hard-bounded by `maxVerify`
-      * checked candidates (a never-matching predicate on a frequent-term
-      * query must not become a full-corpus sidecar scan from one request).
-      */
-    private def verifyInRankOrder(
-        ranked: Seq[(Long, Double)],
-        k: Int,
-        pred: Long => Boolean,
-        maxVerify: Int): Seq[(Long, Double)] = {
-      val kk = math.max(1, k)
-      val out = Seq.newBuilder[(Long, Double)]
-      var found = 0
-      var checked = 0
-      val it = ranked.iterator
-      while (found < kk && checked < maxVerify && it.hasNext) {
-        val hit = it.next()
-        checked += 1
-        if (pred(hit._1)) {
-          out += hit
-          found += 1
-        }
-      }
-      out.result()
     }
   }
 

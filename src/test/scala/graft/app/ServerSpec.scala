@@ -258,10 +258,10 @@ class ServerSpec extends SparkTestBase {
       assert(dBody.contains(""""term":"zzzz","suggestion":"zzzz","df":0"""), dBody)
 
       // /search?lang= filter: candidates restricted BEFORE truncation,
-      // parity with the engine-level searchFiltered
-      val expect = engine.searchFiltered(
+      // parity with the engine-level filtered search
+      val expect = engine.search(
         graft.core.QueryParser.parse("alpha"), 10,
-        id => docMap.get(id).exists(_.lang == "en"))
+        Some(id => docMap.get(id).exists(_.lang == "en")))
       val (fc, fBody) = get(s"$base/search?q=alpha&lang=en&k=10")
       assert(fc == 200)
       val fIds = """"docId":(\d+)""".r.findAllMatchIn(fBody).map(_.group(1).toLong).toSeq

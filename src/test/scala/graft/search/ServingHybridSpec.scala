@@ -157,10 +157,10 @@ class ServingHybridSpec extends SparkTestBase {
     val eng = servingEngine(dir)
     val meta = corpus.collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     val all = eng.searchFuzzy("hast", 10)
-    val en = eng.searchFuzzyFiltered("hast", 10, id => meta(id) == "en")
+    val en = eng.searchFuzzy("hast", 10, filter = Some(id => meta(id) == "en"))
     assert(en == all.filter { case (id, _) => meta(id) == "en" })
     assert(en.nonEmpty && en.size < all.size)
     // k truncation happens AFTER filtering
-    assert(eng.searchFuzzyFiltered("hast", 1, id => meta(id) == "en") == en.take(1))
+    assert(eng.searchFuzzy("hast", 1, filter = Some(id => meta(id) == "en")) == en.take(1))
   }
 }

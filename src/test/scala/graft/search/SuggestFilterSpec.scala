@@ -82,16 +82,16 @@ class SuggestFilterSpec extends SparkTestBase {
     val serving = new SegmentSearch.ServingEngine(segs, meta)
     val store = DocSidecar.openStore(dir).get
     try {
-      val got = serving.searchFiltered(
-        QueryParser.parse("scan merge"), 10, id => store.get(id).exists(_.lang == "en"))
+      val got = serving.search(
+        QueryParser.parse("scan merge"), 10, Some(id => store.get(id).exists(_.lang == "en")))
       assert(got == expect)
       // filter-before-truncation: k=1 of the filtered set, not a filtered top-1
-      val top1 = serving.searchFiltered(
-        QueryParser.parse("scan merge"), 1, id => store.get(id).exists(_.lang == "en"))
+      val top1 = serving.search(
+        QueryParser.parse("scan merge"), 1, Some(id => store.get(id).exists(_.lang == "en")))
       assert(top1 == expect.take(1))
       // maxVerify caps the checked candidates (never-matching predicate)
-      assert(serving.searchFiltered(
-        QueryParser.parse("scan merge"), 10, _ => false, maxVerify = 2).isEmpty)
+      assert(serving.search(
+        QueryParser.parse("scan merge"), 10, Some(_ => false), maxVerify = 2).isEmpty)
     } finally store.close()
   }
 

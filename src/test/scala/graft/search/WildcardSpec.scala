@@ -90,7 +90,7 @@ class WildcardSpec extends SparkTestBase {
     }
 
     // filtered compose: predicate intersects before truncation
-    val even = serving.searchWildcardFiltered("*er", 10, id => id % 2 == 0)
+    val even = serving.searchWildcard("*er", 10, filter = Some(id => id % 2 == 0))
     assert(even.nonEmpty && even.forall(_._1 % 2 == 0))
     assert(even.map(_._1).toSet == serving.searchWildcard("*er", 10).filter(_._1 % 2 == 0).map(_._1).toSet)
   }
